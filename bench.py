@@ -8,10 +8,11 @@ Headline queries:
   q_index_build   THE north-star metric: the real engine build — fused
                   chunk+tokenize, salted bucketed checkpoint, delta+varbyte
                   block-max segments (files/sec derived from it)
-  q_wand_batch    50-query BM25 top-k batch over the compressed segment
-                  index (docID-range-parallel WAND serving, one-shot API)
   q_searcher_cold first batch of a fresh Searcher, no preload — the
                   once-per-server-open cost (cold segment reads, lazy df)
+  q_wand_batch    the same 50-query batch through the one-shot API
+                  (bm25_topk_segments: a new Searcher per call), after
+                  q_searcher_cold has loaded the segment files
   q_searcher_warm the steady-state serving batch: preload() untimed, then
                   min over 3 repeats — per-batch Spark jobs are ONE
   q_searcher_p50  single-query p50 latency on the warm Searcher
@@ -149,9 +150,6 @@ def main() -> None:
     with timed("q_index_build"):
         build_index(spark, index_dir=idx, cfg=cfg, corpus_uri=corpus_dir)
 
-    with timed("q_wand_batch"):
-        bm25_topk_segments(spark, idx, qdf, k=10).count()
-
     # serving path: Searcher bound to the index — cached stats/listings,
     # driver-side tokenize + hashing, lexicon-backed df.
     # Two headline numbers, same split the scaling bench records:
@@ -168,6 +166,8 @@ def main() -> None:
     searcher = Searcher(spark, idx)
     with timed("q_searcher_cold"):
         searcher.topk(fixture_queries(), k=10).count()
+    with timed("q_wand_batch"):
+        bm25_topk_segments(spark, idx, qdf, k=10).count()
     searcher.preload()
     warm_secs = []
     for _ in range(3):

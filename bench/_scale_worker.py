@@ -67,6 +67,41 @@ def _vmstat_delta(before: dict, after: dict) -> dict:
     return {k: after[k] - before[k] for k in after if k in before}
 
 
+def _plan(searcher, qs):
+    """Replicate Searcher.topk's driver-side planning -> range-task
+    payloads (any-mode, k=10, strategy "auto"), for the per-task rusage
+    batch below."""
+    from quickb_spark.functions.hashing import bucket_of, xxhash64
+    from quickb_spark.functions.tokenize import tokenize_py
+    from quickb_spark.query.wand import _auto_ranges, _range_bounds
+
+    toks_by_q = {qid: tokenize_py(text or "") for qid, text in qs}
+    qt_pairs = sorted({(q, t) for q, toks in toks_by_q.items() for t in toks})
+    terms = sorted({t for _, t in qt_pairs})
+    dfs = searcher._lookup_dfs(terms)
+    live = [t for t in terms if dfs[t] > 0]
+    th = {t: xxhash64(t) for t in live}
+    buckets = sorted({bucket_of(t, searcher.n_buckets) for t in live})
+    files = searcher._files_for(buckets)
+    r_count = _auto_ranges(
+        sum(dfs[t] for t in live),
+        searcher.spark.sparkContext.defaultParallelism,
+    )
+    qt_pairs_h = [(q, th[t]) for q, t in qt_pairs if t in th]
+    dfs_h = {th[t]: dfs[t] for t in live}
+    tbq: dict[str, list[int]] = {}
+    for qid, t in qt_pairs_h:
+        tbq.setdefault(qid, []).append(t)
+    stats = searcher.stats
+    block_size = int(stats.get("block_size", 128))
+    return [
+        (r, lo, hi, files, sorted(dfs_h), dfs_h, stats["n_docs"],
+         stats["avgdl"], block_size, tbq, 10, "auto", searcher.k1,
+         searcher.b, None, None, 0)
+        for r, lo, hi in _range_bounds(r_count)
+    ]
+
+
 def _warm_batch_rusage(spark, searcher) -> dict:
     """One warm batch with per-task getrusage, measured at the SAME SCOPE
     as the timed warm repeats (searcher.topk(...).count()): the timed
@@ -80,8 +115,6 @@ def _warm_batch_rusage(spark, searcher) -> dict:
     engine's actual work, wall - utime/slots the scheduling + contention
     residual — host steal inflates wall, never utime."""
     from collections import defaultdict
-
-    from serve_probe import _plan
 
     from quickb_spark.corpus import fixture_queries
 
@@ -101,7 +134,7 @@ def _warm_batch_rusage(spark, searcher) -> dict:
 
     k = 10
     t0 = time.perf_counter()
-    payloads, _ = _plan(searcher, fixture_queries())
+    payloads = _plan(searcher, fixture_queries())
     stats = (
         spark.sparkContext.parallelize(payloads, len(payloads))
         .map(_run).collect()
@@ -396,8 +429,8 @@ def main(cpus: int, corpus_path: str, work_dir: str) -> None:
     # burst that lands on it at full weight (the round-4 pool recorded 4N
     # first-batches of 48-84s whose warm repeat seconds later ran 15s,
     # with zero /proc/vmstat reclaim, ext_cores 0.0 and normal task
-    # utime in q_acct — and bench/serve_probe4.py reproduced neither arm
-    # on a quiet box). Every re-open's raw seconds are recorded.
+    # utime in q_acct — and a same-app vs fresh-app probe reproduced
+    # neither arm on a quiet box, BENCH/BASELINE.md). Every re-open's raw seconds are recorded.
     query_cold_batch_secs = []
     vm_cold = vm_preload = None
     mem_avail_cold_gb = 0.0
@@ -437,8 +470,8 @@ def main(cpus: int, corpus_path: str, work_dir: str) -> None:
     # Three repeats because this guest cannot observe host-side vCPU
     # steal mid-window (measured 2026-08-19: 4N cold batches of 48-84s
     # with warm 15s right after, zero /proc/vmstat reclaim, ext_cores
-    # 0.0, normal pre-window cal_sec — and bench/serve_probe4.py
-    # reproduced neither arm on a quiet box, cold 14.2s). Steal is
+    # 0.0, normal pre-window cal_sec — and a same-app vs fresh-app
+    # probe reproduced neither arm on a quiet box, cold 14.2s). Steal is
     # strictly ADDITIVE noise, so the MIN over repeats estimates the
     # engine's time; every repeat is recorded raw.
     query_warm_batch_secs = []

@@ -30,3 +30,25 @@ def spark():
     yield s
     s.stop()
     shutil.rmtree(_SHM_TEST_DIR, ignore_errors=True)
+
+
+@pytest.fixture
+def make_storage_unreachable(monkeypatch):
+    """Returns a switch that simulates index storage pyarrow cannot reach:
+    once called, listing segment (and lexicon) files fails, and the direct
+    range tasks must not run. A Searcher opened after the switch has to
+    fall back to the channel scorer on its own. Undone at test teardown."""
+    from quickb_spark.index import p2_direct
+    from quickb_spark.query import serve_direct
+
+    def unreachable(*_a, **_kw):
+        raise OSError("index storage is not reachable from pyarrow")
+
+    def no_direct(*_a, **_kw):
+        raise AssertionError("direct serving ran without a file listing")
+
+    def switch():
+        monkeypatch.setattr(p2_direct, "list_bucket_files", unreachable)
+        monkeypatch.setattr(serve_direct, "serve_topk_direct", no_direct)
+
+    return switch

@@ -3,7 +3,7 @@
     spark-submit --py-files quickb_spark.zip jobs/run_queries.py \\
       --index-dir <index root> \\
       --queries <parquet/csv with (query_id, query_text)> \\
-      [--k 10] [--output <parquet dir>] [--strategy auto|wand|exact] \\
+      [--k 10] [--output <parquet dir>] [--strategy auto|exact] \\
       [--ranges auto|<int>] [--phrase [--slop N]] [--match-all]
 """
 
@@ -22,14 +22,13 @@ def main() -> None:
     ap.add_argument("--queries", required=True)
     ap.add_argument("--k", type=int, default=10)
     ap.add_argument("--output", default=None)
-    ap.add_argument("--strategy", default="auto", choices=["auto", "wand", "exact"])
+    ap.add_argument("--strategy", default="auto", choices=["auto", "exact"])
     ap.add_argument("--ranges", default="auto", help="docID-range fan-out per query")
     ap.add_argument(
         "--phrase",
         action="store_true",
         help="phrase retrieval: each query's tokens must occur in order "
-        "with successive gaps <= slop + 1 (BM25 scores unchanged); "
-        "Searcher path only",
+        "with successive gaps <= slop + 1 (BM25 scores unchanged)",
     )
     ap.add_argument(
         "--slop",
@@ -42,21 +41,13 @@ def main() -> None:
         "--match-all",
         action="store_true",
         help="conjunctive (AND-mode) retrieval: only docs containing every "
-        "query term (BM25 scores unchanged); Searcher path only",
-    )
-    ap.add_argument(
-        "--one-shot",
-        action="store_true",
-        help="use the self-contained bm25_topk_segments call instead of the "
-        "Searcher serving path (identical results; pays per-call fixed costs)",
+        "query term (BM25 scores unchanged)",
     )
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
 
     from quickb_spark.query.searcher import Searcher
-    from quickb_spark.query.wand import bm25_topk_segments
-
     from quickb_spark.session import tune_builder
 
     spark = tune_builder(
@@ -68,19 +59,10 @@ def main() -> None:
         queries = spark.read.parquet(args.queries)
 
     ranges = args.ranges if args.ranges == "auto" else int(args.ranges)
-    if args.one_shot:
-        if args.phrase or args.match_all:
-            raise SystemExit("--phrase/--match-all require the Searcher "
-                             "path (drop --one-shot)")
-        result = bm25_topk_segments(
-            spark, args.index_dir, queries, k=args.k,
-            strategy=args.strategy, ranges=ranges,
-        )
-    else:
-        result = Searcher(spark, args.index_dir).topk(
-            queries, k=args.k, strategy=args.strategy, ranges=ranges,
-            phrase=args.phrase, match_all=args.match_all, slop=args.slop,
-        )
+    result = Searcher(spark, args.index_dir).topk(
+        queries, k=args.k, strategy=args.strategy, ranges=ranges,
+        phrase=args.phrase, match_all=args.match_all, slop=args.slop,
+    )
     if args.output:
         result.write.mode("overwrite").parquet(args.output)
     else:

@@ -211,12 +211,13 @@ def _gate_index(spark: SparkSession, sf_dir: str) -> str:
 
 
 def q_wand_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T1 full path: compressed segments + block-max WAND top-k."""
+    """T1 full path: compressed segments served by the Searcher engine
+    (direct range tasks, block-max pruned dense top-k)."""
     from quickb_spark.query.wand import bm25_topk_segments
 
     idx = _gate_index(spark, sf_dir)
     qdf = spark.createDataFrame(gate.GATE_QUERIES, ["query_id", "query_text"])
-    return bm25_topk_segments(spark, idx, qdf, k=10, use_wand=True)
+    return bm25_topk_segments(spark, idx, qdf, k=10)
 
 
 def q_phrase_segments(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,8 +21,8 @@ Plan shape (and why it scales):
   matched ≥1 query term.
 
 Everything is a built-in column expression — whole-stage codegen end to end;
-no Python in the scoring hot path. (The compressed-segment WAND path in
-quickb_spark.query.wand trades this for skip-based pruning.)
+no Python in the scoring hot path. (The compressed-segment engine,
+quickb_spark.query.searcher, trades this for block-max pruning.)
 """
 
 from __future__ import annotations

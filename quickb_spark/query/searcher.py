@@ -1,53 +1,45 @@
-"""Serving-path BM25: a Searcher bound to one index, fixed costs cached.
+"""BM25 serving: a Searcher bound to one index, fixed costs cached.
 
-`bm25_topk_segments` is self-contained and re-pays per call: a directory
-listing for the segment scan, a Spark job to tokenize+collect query terms,
-a job to sum candidate df for the auto range split, and a postings-metadata
-groupBy for the global per-term df. Those fixed costs don't shrink with
-more executors, which is exactly why round 2's query batches scaled
-NEGATIVELY from N to 4N workers.
+The Searcher is the package's only query engine: the one-shot
+`quickb_spark.query.wand.bm25_topk_segments`, the streaming base+delta
+scorer (no-delta case), the gate queries, `jobs/run_queries.py` and the
+benchmarks all serve through it. It keeps every fixed cost off the
+per-batch path:
 
-The Searcher removes all of them from the per-batch path:
-
-- segment + lexicon DataFrames are created once (Spark caches the file
-  listing inside the DataFrame's InMemoryFileIndex);
+- segment + lexicon DataFrames and the segment file listing are created
+  once per snapshot (`refresh()`);
 - queries are tokenized DRIVER-side (the engine tokenizer is a plain regex
   — quickb_spark.functions.tokenize.tokenize_py — and a query is a short
   string; no Spark job to discover the term set);
 - term -> bucket pruning literals use the pure-Python xxhash64 mirror
   (functions/hashing.py, bit-identical to F.xxhash64 — tested);
-- global per-term df comes from the build-time lexicon (segments.py phase
-  3). At `preload()` (index open) the whole lexicon loads DRIVER-side into
-  two sorted NumPy arrays when it fits QKB_LEX_DRIVER_MB (default 1024 —
-  a (term_h, df) pair is 16 bytes, so the default holds ~67M terms; the
-  4M-doc fixture's vocabulary is ~3 orders of magnitude under that), the
+- global per-term df comes from the build-time lexicon. At `preload()`
+  (index open) the whole lexicon loads DRIVER-side into two sorted NumPy
+  arrays when its parquet fits `load_lexicon(max_mb=)` (default 1024 — a
+  (term_h, df) pair is 16 bytes, so the default holds ~67M terms), the
   same way Lucene loads the term dictionary at reader open: a df lookup
-  is then a searchsorted probe, and NO Spark job exists on the serving
-  path at all (the round-4 pools measured the fresh-server lexicon-scan
-  job costing 1.5-17s at 4N depending on which executor JVMs the tiny
-  scan landed on — a fixed cost no parallelism can shrink). Indexes
-  whose lexicon exceeds the cap (or a Searcher that never preloads) fall
-  back to the bucket-pruned Spark lookup, cached per term with negative
-  caching — a serving workload's repeated terms never touch storage
-  twice;
+  is then a searchsorted probe and no Spark job besides the scoring job
+  runs per batch. Indexes whose lexicon exceeds the cap (or a Searcher
+  that never preloads, such as the one-shot API's) use the bucket-pruned
+  Spark lookup, cached per term with negative caching — repeated terms
+  never touch storage twice;
 - the auto range split is computed from those cached dfs.
 
-Per batch the remaining Spark work is ONE job, and by default it is the
-DIRECT one (query/serve_direct.py): R range tasks read the candidate
-segment rows themselves with pyarrow and return only top-k tuples — no
-stream bytes on the JVM<->Python Arrow channel, no shuffle, no window job
-(the channel was the measured reason round-3 query batches scaled at half
-the build's rate). The channel path (pruned scan ⋈ broadcast (query, term)
-relation → JVM range slicing → applyInPandas scorer → top-k window)
-remains as the automatic fallback for FS schemes pyarrow cannot reach and
-as the A/B control (QKB_SERVE_CHANNEL=1). Both paths score through the
-same kernels and return identical results, also identical to
-bm25_topk_segments (asserted in tests/test_searcher.py).
+Per batch the remaining Spark work is ONE job of direct range tasks
+(query/serve_direct.py): R tasks read the candidate segment rows
+themselves with pyarrow and return only top-k tuples — no stream bytes on
+the JVM<->Python Arrow channel, no shuffle, no window job. When pyarrow
+cannot reach the index's storage (the segment listing fails) the Searcher
+falls back, on its own, to the channel scorer (query/wand._score_segments:
+pruned scan → JVM range slicing → applyInPandas → top-k window), which
+scores with the same kernels and returns the same rows (tested by making
+the listing fail). Any-mode and AND-mode work on both; phrase needs the
+direct tasks.
 
-Phrase mode (`topk(..., phrase=True)`): exact-phrase retrieval — BM25
-scores unchanged, result set restricted to docs whose token stream
-contains the query terms consecutively; candidate postings are verified by
-block-sliced position decode (format v5 block_pos_off). Direct path only.
+Phrase mode (`topk(..., phrase=True)`): phrase retrieval — BM25 scores
+unchanged, result set restricted to docs whose token stream contains the
+query terms in order; candidate postings are verified by block-sliced
+position decode (format v5 block_pos_off).
 
 Staleness: the Searcher snapshots one index state. After a rebuild or a
 delta fold, call `refresh()` (or construct a new Searcher) — cached file
@@ -55,8 +47,6 @@ listings and dfs would otherwise serve the old segment files.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -132,21 +122,19 @@ class Searcher:
             self._seg_files.update(by_b)
         return [p for b in buckets for p in self._seg_files[b]]
 
-    def load_lexicon(self, max_mb: int | None = None) -> bool:
+    def load_lexicon(self, max_mb: int = 1024) -> bool:
         """Load the whole (term_h, df) lexicon driver-side as two sorted
         NumPy arrays — the term dictionary a search server holds in memory
         from reader open. A df lookup becomes a searchsorted probe and the
         serving path runs ZERO Spark jobs besides the one scoring job.
 
         Skipped (returns False) when the lexicon's on-disk parquet exceeds
-        `max_mb` (default QKB_LEX_DRIVER_MB, 1024 — decoded pairs are 16
-        bytes/term, so the parquet cap keeps the driver arrays well under
-        ~2 GB even at ~100M terms) or the FS is not pyarrow-reachable; the
-        bucket-pruned Spark lookup then remains the lazy path."""
+        `max_mb` (1024 — decoded pairs are 16 bytes/term, so the parquet
+        cap keeps the driver arrays well under ~2 GB even at ~100M terms)
+        or the FS is not pyarrow-reachable; the bucket-pruned Spark lookup
+        then remains the lazy path."""
         import numpy as np
 
-        if max_mb is None:
-            max_mb = int(os.environ.get("QKB_LEX_DRIVER_MB", "1024"))
         try:
             from quickb_spark.index.p2_direct import (
                 list_bucket_files,
@@ -177,8 +165,7 @@ class Searcher:
         self._lex_mem = (th[order], df[order])
         return True
 
-    def preload(self, phrase: bool = False,
-                pretouch_mb: int | None = None) -> int:
+    def preload(self, phrase: bool = False, pretouch_mb: int = 0) -> int:
         """Index-open for serving: load every segment file's decoded table
         into the executor workers' caches (best-effort, one task per slot
         x2 rounds) so the first query batch pays no cold segment reads —
@@ -186,8 +173,8 @@ class Searcher:
         Opt-in: sparse workloads may prefer lazy loading. Returns the
         per-worker decoded byte count (0 when the FS is not reachable from
         Python — the channel fallback has no worker cache to warm).
-        pretouch_mb additionally pre-grows each worker's malloc arena (see
-        serve_direct.preload_files; default QKB_SERVE_PRETOUCH_MB).
+        pretouch_mb (default 0 = off) additionally pre-grows each worker's
+        malloc arena (see serve_direct.preload_files).
         Also loads the term dictionary driver-side (load_lexicon) so no
         per-batch Spark lookup job remains."""
         if self._lex_mem is None:
@@ -257,16 +244,24 @@ class Searcher:
         (slop=0, the default: exact consecutive phrase; slop=N: "these
         terms in order within N extra tokens" — the code-search follow-up
         to exact phrase). Scores are the unchanged BM25 sums, ranked
-        identically. Requires an index built with store_positions and a
-        pyarrow-reachable FS (the direct serving path position-verifies
+        identically. Requires an index built with store_positions and
+        storage pyarrow can reach (the direct range tasks position-verify
         candidates block by block).
 
         match_all=True: conjunctive (AND-mode) retrieval — only docs
         containing EVERY query term are returned; scores and ranking are
         the unchanged BM25 sums (gate analog: t6_bm25_conjunctive).
-        Works on BOTH serving paths (AND-mode needs no positions); phrase
+        Works on the channel fallback too (AND-mode needs no positions); phrase
         already implies all-terms containment, so combining the two is
-        rejected."""
+        rejected.
+
+        strategy: "auto" (dense accumulation, block-max pruned on large
+        candidate sets) or "exact" (exhaustive oracle) — identical
+        results."""
+        if strategy not in ("auto", "exact"):
+            raise ValueError(
+                f"strategy must be 'auto' or 'exact', got {strategy!r}"
+            )
         if phrase and match_all:
             raise ValueError(
                 "phrase=True already requires every term (in order); "
@@ -333,11 +328,7 @@ class Searcher:
             if not conj_seqs:
                 return empty
 
-        files = (
-            None
-            if os.environ.get("QKB_SERVE_CHANNEL") == "1"
-            else self._files_for(buckets)
-        )
+        files = self._files_for(buckets)
         if files is not None:
             from quickb_spark.query.serve_direct import serve_topk_direct
 
@@ -348,13 +339,13 @@ class Searcher:
             )
         if phrase:
             raise ValueError(
-                "phrase queries require the direct serving path "
-                "(pyarrow-reachable index FS, QKB_SERVE_CHANNEL unset) — "
+                "phrase queries need index storage pyarrow can read "
+                f"(pyarrow could not list {self.index_dir}/segments) — "
                 "position verification reads the v5 block slices directly"
             )
+        # pyarrow cannot reach the index's storage: channel fallback.
         # match_all needs no positions, so unlike phrase it is expressible
-        # on the channel scorer too: HDFS-only deployments keep AND-mode
-        # (same _conj_topk kernel both paths — identity tested)
+        # here too (same _conj_topk kernel both paths — identity tested)
         seg = self.seg.filter(F.col("bucket").isin(buckets)).filter(
             F.col("term_h").isin(list(th.values()))
         )

@@ -1,27 +1,20 @@
 """Direct-pyarrow BM25 serving: range tasks read segment files themselves.
 
-Why this exists: the channel serving path (query/wand.py) ships every
-candidate stream slice through the JVM->Python Arrow channel once per range
-(pruned scan -> JVM slicing -> shuffle -> applyInPandas). The round-3
-scaling pools measured query batches scaling at only ~half the build's rate
-(median q-eff 0.493 vs build 0.802, BENCH/BASELINE.md), and the Arrow
-channel is the one component of that path measured NOT to parallelize with
-cores in this environment — the same ceiling that drove the build's direct
-engine (index/p1_direct.py docstring). This module removes the channel from
-serving the same way the build did:
+This is the scoring job of every Searcher batch (query/searcher.py):
 
   driver plans R docID ranges (ranges partition the doc space, so per-range
   top-k lists merge exactly) -> one Spark task per range reads the
   CANDIDATE segment rows itself with pyarrow (bucket-pruned file list from
-  the Searcher's cached listing + parquet row-group predicate pushdown on
-  term_h), slices each row's streams to its range via the per-block byte
-  offsets (the per-block absolute delta reset makes any block-aligned slice
-  independently decodable), and scores the whole query batch with the SAME
-  kernels as the channel scorer (query/wand._build_struct /
-  _score_query_set — bit-identity asserted in tests/test_searcher.py).
-  Only per-range top-k rows (<= R*Q*k) ever cross the Python<->JVM
-  boundary; the driver merges them exactly and builds the result DataFrame
-  locally — no shuffle, no window job, no stream bytes on the channel.
+  the Searcher's cached listing), slices each row's streams to its range
+  via the per-block byte offsets (the per-block absolute delta reset makes
+  any block-aligned slice independently decodable), and scores the whole
+  query batch with the kernels in query/wand.py (`_build_struct`,
+  `_score_query_set`, `_conj_topk`) or phrase-verifies it here. Only
+  per-range top-k rows (<= R*Q*k) ever cross the Python<->JVM boundary;
+  the driver merges them exactly and builds the result DataFrame locally —
+  no shuffle, no window job, no stream bytes on the Arrow channel (the
+  channel was the measured reason round-3 query batches scaled at ~half
+  the build's rate: median q-eff 0.493 vs build 0.802, BENCH/BASELINE.md).
 
 Candidate rows are consumed as zero-copy NumPy/buffer VIEWS over the Arrow
 table (offsets+values of the binary and list columns) — never `to_pylist`
@@ -30,23 +23,21 @@ parquet decode cost, 2026-08-18 probe on the 4M index) — and each file's
 DECODED table is kept in a per-worker-process LRU cache (Spark reuses
 Python workers): the R range tasks of a batch, and every later batch a
 serving process handles, re-read a candidate file zero times instead of
-once per range. This is the decoded-block cache every serving engine
-keeps; entries are fingerprinted by (size, mtime) so a rebuilt index
-invalidates, and the budget is QKB_SERVE_CACHE_MB per worker process
+once per range. Entries are fingerprinted by (size, mtime) so a rebuilt
+index invalidates, and the budget is QKB_SERVE_CACHE_MB per worker process
 (default 6144 — size it ABOVE the hot working set: a budget just under it
 turns the LRU into sequential-scan thrash; 0 disables). Measured on the
 4M index at 8 cores: warm 50-query batch 29.3s uncached -> 15.4s cached
-(see BENCH/query_decompose_r4.json). `Searcher.preload()` loads the
-tables at server construction — the Lucene-style index open — so even
-the FIRST batch skips the cold segment read.
+(see BENCH/query_decompose_r4.json). Behind it sits a host-shared tier of
+decoded tables (`_shm_dir`), and `Searcher.preload()` fills both at index
+open, so even the FIRST batch skips the cold segment read.
 
-Scale notes (the 100 TB story):
+Scale notes:
 - each range task re-reads the candidate rows (R-fold read amplification of
-  candidate bytes). Reads are bucket-pruned, term-filtered, page-cached
-  parquet, so the amplified cost is snappy decode — CPU that scales with
-  cores, unlike the channel transfer it replaces; total read work is fixed
-  per batch (R is postings-driven, not cluster-driven), so it spreads over
-  whatever cores exist. At object-store scale the knob is the range count
+  candidate bytes). Reads are bucket-pruned, page-cached parquet, so the
+  amplified cost is decode — CPU that scales with cores; total read work
+  is fixed per batch (R is postings-driven, not cluster-driven). At
+  object-store scale the knob is the range count
   (query/wand.RANGE_TARGET_POSTINGS): fewer, bigger ranges trade task
   memory for read amplification.
 - phrase verification is vectorized end to end: candidate docs come from
@@ -55,11 +46,8 @@ Scale notes (the 100 TB story):
   sorted-set intersection on (candidate, position) composite keys — no
   per-document Python loop exists on the phrase path.
 - conjunctive (all-terms) mode reuses the same sorted-array candidate
-  intersection WITHOUT the position verify (`_conj_topk`) — AND-mode
-  retrieval at any-mode cost minus scoring of non-matching docs; works on
+  intersection WITHOUT the position verify (`_conj_topk`); works on
   positionless indexes.
-- the channel path remains the automatic fallback (FS schemes pyarrow can't
-  reach) and the A/B control (QKB_SERVE_CHANNEL=1).
 
 Reference parity: this serves the same capability as the reference's
 ChromaDB top-k query (examples/chromadb_integration.ipynb cell 8); phrase
@@ -75,7 +63,7 @@ import numpy as np
 
 from quickb_spark.index.encode import decode_posting_list, varbyte_decode
 
-__all__ = ["serve_topk_direct", "list_segment_files", "preload_files"]
+__all__ = ["serve_topk_direct", "preload_files"]
 
 #: Segment-row columns every serving read needs; position columns join in
 #: phrase mode only.
@@ -84,13 +72,6 @@ _BASE_COLS = [
     "block_last_doc", "block_doc_off", "block_tf_off", "block_dl_off",
 ]
 _POS_COLS = ["pos_stream", "block_pos_off"]
-
-
-def list_segment_files(index_dir: str, buckets: list[int]) -> list[str]:
-    """Candidate segment file paths for the given buckets (pyarrow FS)."""
-    from quickb_spark.index.p2_direct import list_bucket_files
-
-    return [p for _, p, _ in list_bucket_files(f"{index_dir}/segments", buckets)]
 
 
 #: Per-worker-process decoded-table cache: (path, want_pos) ->
@@ -175,7 +156,7 @@ def _shm_path(shm: str, path: str, fp: tuple, want_pos: bool) -> str:
 
 
 def preload_files(spark, files: list[str], want_pos: bool = False,
-                  rounds: int = 2, pretouch_mb: int | None = None) -> int:
+                  rounds: int = 2, pretouch_mb: int = 0) -> int:
     """Best-effort warm of every executor worker's decoded-table cache —
     the index-open step of a serving process (Lucene-style: segments load
     at reader open, not on the first query). One task per task slot, each
@@ -184,7 +165,7 @@ def preload_files(spark, files: list[str], want_pos: bool = False,
     near-free). Returns the per-worker decoded byte count of the last
     round's first task.
 
-    pretouch_mb (default QKB_SERVE_PRETOUCH_MB, 0=off): additionally grow
+    pretouch_mb (default 0 = off): additionally grow
     each worker's malloc arena by this many MB of touched-then-freed 32MB
     blocks — the Python-worker analog of the JVM's AlwaysPreTouch. With
     the arena-reuse env from quickb_spark.session applied, the first
@@ -204,10 +185,6 @@ def preload_files(spark, files: list[str], want_pos: bool = False,
     vs 12.3s @4N, VERDICT r4 #4)."""
     sc = spark.sparkContext
     par = max(1, sc.defaultParallelism)
-    if pretouch_mb is None:
-        import os
-
-        pretouch_mb = int(os.environ.get("QKB_SERVE_PRETOUCH_MB", "0"))
 
     if _shm_dir() is not None and len(files) > 1:
         # phase A: decode once per file, spread over every task slot
@@ -380,10 +357,10 @@ class _RowView:
 def _slice_row(rv: _RowView, i: int, lo: int, hi: int, block_size: int,
                want_pos: bool):
     """Row i -> range-trimmed part, or None when it has no postings in
-    [lo, hi]. Mirrors the JVM slicing expressions in wand._slice_to_ranges
-    exactly: b_lo = #blocks entirely below lo, b_hi = min(nb, #blocks
-    starting <= hi + 1); the decoded slice is then trimmed to [lo, hi] so
-    every doc is scored in exactly one range."""
+    [lo, hi]. Mirrors the JVM slicing expressions of the channel fallback
+    (wand._slice_to_ranges) exactly: b_lo = #blocks entirely below lo,
+    b_hi = min(nb, #blocks starting <= hi + 1); the decoded slice is then
+    trimmed to [lo, hi] so every doc is scored in exactly one range."""
     bld = rv.blocks("block_last_doc", i)
     nb = len(bld)
     b_lo = int(np.searchsorted(bld, lo, "left"))

@@ -1,72 +1,52 @@
-"""BM25 top-k over compressed segments: DAAT with block-max WAND pruning.
+"""BM25 top-k over compressed segments: scoring kernels and the one-shot API.
 
-Query plan (SURVEY.md §2.11):
+Every BM25 query is served by `quickb_spark.query.searcher.Searcher`; the
+one-shot `bm25_topk_segments` is a thin wrapper that opens a Searcher for
+one call. This module holds what the Searcher's range tasks share:
 
-  queries ─► tokenize ─► distinct terms (tiny, ONE driver round-trip that
-  also yields the scorer's query->terms closure and the term+bucket
-  pruning literals) ─► segment scan PRUNED to those bucket partitions +
-  term filter (pushed to parquet) ─► SLICE each matched row's streams into
-  docID ranges JVM-side (substring on the per-block byte offsets; the
-  per-block absolute delta reset makes any block-aligned slice
-  independently decodable) ─► groupBy(range_id).applyInPandas batch
-  scorer (query map + global dfs in the closure) ─► exact top-k merge
-  (window over Q·R·k rows).
+  - docID-range planning: docIDs are xxhash64 outputs, uniform over int64,
+    so R equal int64 intervals (`_range_bounds`) split every posting list
+    ~evenly with zero statistics. Ranges partition the doc space, so
+    per-range top-k lists merge exactly (a doc's full score is computed in
+    exactly one range); `_auto_ranges` sizes R from the candidate-posting
+    count and the cluster's task slots.
+  - `_build_struct`: a term's range-trimmed slice parts (salted sub-lists
+    re-merged — hot-term salting is a build-time artifact, queries see one
+    logical posting list) with block-max metadata rebuilt on the merged
+    arrays and per-posting BM25 scores.
+  - two scoring kernels, bit-identical including tie-breaks (fuzz-tested
+    in tests/test_wand_fuzz.py):
+      * `_dense_topk` — the engine (strategy="auto"): a shared sorted doc
+        domain is built ONCE per range, each term gets a dense index column
+        into it, and every query in the batch scores via buffered
+        fancy-index adds into one reused accumulator. Above
+        AUTO_EXACT_MAX_POSTINGS candidate postings it first applies the
+        block-max segment-sweep masks (`_blockmax_masks`): a θ seed from
+        exact sums of each term's top-k candidates, then every docID
+        segment whose summed covering-block upper bounds fall below θ is
+        dropped with one boolean mask.
+      * `_exact_topk` — vectorized exhaustive accumulation over its own
+        concatenated postings; the in-package oracle behind
+        strategy="exact".
+  - `_conj_topk`: conjunctive (all-terms) top-k over the same structs.
 
-Parallel serving: docIDs are xxhash64 outputs, uniform over int64, so R
-equal int64 intervals split every posting list ~evenly. Each range task
-decodes ONLY its slices — a hot-term query no longer funnels its whole
-posting list through one Python task (the round-1 serving bottleneck), and
-per-task memory is bounded by candidate_postings/R. Streams cross the
-Arrow channel once per RANGE, not once per (query, range): a hot term
-shared by the whole batch ships once (the round-2 batch-serving
-bottleneck). Ranges partition the doc space, so per-range top-k lists
-merge exactly (a doc's full score is computed in exactly one range).
+Pruning uses strict `< θ` (θ backed off a few ulps) so docs tying the kth
+score are still scored — results are EXACTLY the exhaustive scorer's.
+Upper bounds come from (max_tf, min_dl): BM25 is increasing in tf and
+decreasing in dl, so idf·S(max_tf, min_dl) bounds every doc in a block;
+block bounds are recomputed post-merge so salting can't break them. df for
+idf is the GLOBAL per-term df (build-time lexicon), so a range never sees
+a partial df.
 
-The scorer decodes varbyte slices (NumPy), re-merges salted sub-lists per
-term (hot-term salting is a build-time artifact — queries see one logical
-posting list), recomputes block-max metadata on the merged arrays, and
-scores with one of four equivalent kernels (all bit-identical, including
-tie-breaks — verified in tests/test_segments_wand.py + test_wand_fuzz.py):
-
-  - `_dense_topk` — the auto path: a shared sorted doc domain is built
-    ONCE per range, each term gets a precomputed dense index column, and
-    every query in the batch scores via buffered fancy-index adds into
-    one reused accumulator — no per-query sort or copy of shared posting
-    arrays. Above ~2M candidate postings it first applies the block-max
-    segment-sweep masks (`_blockmax_masks`), so pruning composes with
-    the dense path.
-  - `_exact_topk` — vectorized exhaustive accumulation over its own
-    concatenated postings; the self-contained baseline (strategy=
-    "exact") the others are fuzz-compared against.
-  - `_blockmax_topk` — block-max pruning vectorized as a θ-seed +
-    block-boundary segment sweep that masks out doc ranges whose summed
-    block upper bounds can't reach the running kth score, then exhaustive
-    scoring of the survivors. NumPy end to end — the same asymptotic win
-    as WAND without per-doc Python cost.
-  - `_wand_topk` (strategy="wand") — classic document-at-a-time block-max
-    WAND: a pivot is the first term (in current-docID order) at which
-    accumulated upper bounds reach θ; everything before it is skipped via
-    searchsorted jumps, and a block-level upper-bound check skips whole
-    blocks. The literature-faithful DAAT loop, kept as the equivalence
-    baseline; its per-step interpreter cost loses to the vectorized
-    kernels on multi-million-posting tasks.
-
-All pruning uses strict `< θ` so docs tying the kth score are still
-evaluated — results are EXACTLY the naive scorer's.
-
-Correctness guardrails:
-- upper bounds come from (max_tf, min_dl): BM25 is monotonically increasing
-  in tf and decreasing in dl, so idf·S(max_tf, min_dl) bounds every doc in
-  scope; block bounds are recomputed post-merge so salting can't break them.
-- df for idf is the GLOBAL per-term sum of df_part over all salted rows,
-  joined onto every slice — a range never sees a partial df.
-- slices are block-aligned (supersets of the range); the scorer trims the
-  decoded arrays to [lo, hi] so boundary docs are scored exactly once.
+The channel scorer (`_score_segments`: JVM-side range slicing in
+`_slice_to_ranges` -> `groupBy(range_id).applyInPandas` with
+`_make_batch_scorer` -> top-k window) is the Searcher's fallback for index
+storage pyarrow cannot reach; it scores with the same kernels and returns
+the same rows. `_segment_candidates` decodes base postings for the
+streaming base+delta scorer (quickb_spark.streaming.incremental).
 """
 
 from __future__ import annotations
-
-import heapq
 
 import numpy as np
 import pandas as pd
@@ -76,7 +56,7 @@ from pyspark.sql import functions as F
 from quickb_spark.config import BM25_B, BM25_K1
 from quickb_spark.index.encode import block_meta, decode_posting_list
 from quickb_spark.index.segments import load_stats
-from quickb_spark.query.bm25 import query_terms, topk_window
+from quickb_spark.query.bm25 import topk_window
 
 __all__ = ["bm25_topk_segments"]
 
@@ -100,130 +80,10 @@ def _exact_topk(terms, k):
     return uniq[order].tolist(), acc[order].tolist()
 
 
-def _wand_topk(terms, k, k1, b, avgdl):
-    """Block-max WAND. terms: [{docs, tfs, dls, idf, blocks...}]."""
-    nt = len(terms)
-    if nt == 0:
-        return [], []
-    ptr = [0] * nt
-    lens = [len(t["docs"]) for t in terms]
-    # global upper bound per term
-    ub = []
-    for t in terms:
-        mtf = float(t["tfs"].max())
-        mdl = float(t["dls"].min())
-        ub.append(
-            t["idf"] * mtf * (k1 + 1.0) / (mtf + k1 * (1.0 - b + b * mdl / avgdl))
-        )
-    heap: list[float] = []  # min-heap of top-k scores (θ = heap[0])
-    results: dict[int, float] = {}
-
-    def theta():
-        return heap[0] if len(heap) == k else -np.inf
-
-    while True:
-        active = [t for t in range(nt) if ptr[t] < lens[t]]
-        if not active:
-            break
-        active.sort(key=lambda t: terms[t]["docs"][ptr[t]])
-        acc = 0.0
-        pivot_i = None
-        for i, t in enumerate(active):
-            acc += ub[t]
-            if acc >= theta():
-                pivot_i = i
-                break
-        if pivot_i is None:
-            break  # no doc can reach θ anymore
-        pivot_t = active[pivot_i]
-        pivot_doc = int(terms[pivot_t]["docs"][ptr[pivot_t]])
-        # extend the prefix over ties: every term currently AT pivot_doc can
-        # contribute to its score and must be inside the pruning bound
-        while (
-            pivot_i + 1 < len(active)
-            and int(terms[active[pivot_i + 1]]["docs"][ptr[active[pivot_i + 1]]])
-            == pivot_doc
-        ):
-            pivot_i += 1
-
-        # block-max refinement (Ding & Suel BMW): bound the pivot-prefix
-        # contribution by the block maxima at pivot_doc
-        block_acc = 0.0
-        # min_block_end must stay an exact int: doc ids use up to 63 bits
-        # and float64 rounding of an id can land BELOW the pivot, turning
-        # the skip into a no-op (infinite loop)
-        min_block_end: int | None = None
-        for t in active[: pivot_i + 1]:
-            td = terms[t]
-            bidx = int(np.searchsorted(td["block_last_doc"], pivot_doc))
-            if bidx >= len(td["block_last_doc"]):
-                # this term's list ends before pivot_doc: it contributes
-                # nothing at or beyond the pivot, and imposes no skip bound
-                continue
-            mtf = float(td["block_max_tf"][bidx])
-            mdl = float(td["block_min_dl"][bidx])
-            block_acc += (
-                td["idf"] * mtf * (k1 + 1.0) / (mtf + k1 * (1.0 - b + b * mdl / avgdl))
-            )
-            bend = int(td["block_last_doc"][bidx])
-            min_block_end = bend if min_block_end is None else min(min_block_end, bend)
-        if block_acc < theta():
-            # no doc in [pivot_doc, min_block_end] can reach θ from the
-            # prefix alone; docs beyond the next non-prefix cursor may gain
-            # other contributions, so never skip past that cursor
-            skip_to = min_block_end + 1
-            if pivot_i + 1 < len(active):
-                nxt = active[pivot_i + 1]
-                skip_to = min(skip_to, int(terms[nxt]["docs"][ptr[nxt]]))
-            for t in active[: pivot_i + 1]:
-                td = terms[t]
-                ptr[t] = int(np.searchsorted(td["docs"], skip_to))
-            continue
-
-        first_doc = int(terms[active[0]]["docs"][ptr[active[0]]])
-        if first_doc == pivot_doc:
-            # all prefix terms aligned on pivot_doc: evaluate it fully
-            s = 0.0
-            for t in active:
-                td = terms[t]
-                p = ptr[t]
-                if p < lens[t] and td["docs"][p] == pivot_doc:
-                    s += float(td["scores"][p])
-                    ptr[t] = p + 1
-            results[pivot_doc] = s
-            if len(heap) < k:
-                heapq.heappush(heap, s)
-            elif s > heap[0]:
-                heapq.heapreplace(heap, s)
-        else:
-            # advance the lagging term with the largest ub (fewest future
-            # evaluations) up to pivot_doc
-            lagging = [
-                t
-                for t in active[: pivot_i + 1]
-                if int(terms[t]["docs"][ptr[t]]) < pivot_doc
-            ]
-            lag = max(lagging, key=lambda t: ub[t])
-            ptr[lag] = int(np.searchsorted(terms[lag]["docs"], pivot_doc))
-
-    if not results:
-        return [], []
-    uniq = np.array(list(results.keys()), dtype=np.int64)
-    acc = np.array(list(results.values()))
-    order = np.lexsort((uniq, -acc))[:k]
-    return uniq[order].tolist(), acc[order].tolist()
-
-
-def _blockmax_topk(terms, k, k1, b, avgdl):
-    """Vectorized block-max pruning: same answers as `_exact_topk`, same
-    block-max bounds as `_wand_topk`, but NumPy end to end.
-
-    The pointer-chasing `_wand_topk` loop pays Python-interpreter cost per
-    DAAT step, which loses to the vectorized exhaustive kernel by >10x on
-    multi-million-posting tasks (measured: 7.5M postings scored exhaustively
-    in ~1s vs ~18s through the Python WAND loop, 2026-08-18 probe on the 4M
-    index). This scorer keeps the asymptotic win of block-max pruning
-    without the per-doc Python loop:
+def _blockmax_masks(terms, k, k1, b, avgdl):
+    """Vectorized block-max pruning: per-term boolean keep-masks over
+    postings (None entry = keep whole term). Returns None when fewer than
+    k candidate docs exist (no valid θ, nothing prunable).
 
       1. θ seed — per term, take its top-k posting scores' docs as
          candidates; exact-sum those candidate docs across all terms
@@ -233,33 +93,13 @@ def _blockmax_topk(terms, k, k1, b, avgdl):
       2. Segment sweep — the union of all terms' block boundaries cuts the
          docID axis into segments, each covered by exactly one block per
          term; the per-segment upper bound is the sum of covering-block
-         bounds (idf·S(block_max_tf, block_min_dl) — the `_wand_topk`
-         bound). Segments whose bound falls below θ cannot hold a top-k
-         doc and every posting in them is dropped with one boolean mask.
-      3. Exhaustive vectorized scoring of the survivors.
+         bounds idf·S(block_max_tf, block_min_dl).
 
-    Pruning uses strict `< θ` (with θ backed off 4 ulps so a different fp
-    summation order can't promote it past the exact path's kth score), so
-    ties at the kth score survive — bit-identical results to `_exact_topk`
-    including tie-breaks (fuzz-tested in tests/test_wand_fuzz.py)."""
-    masks = _blockmax_masks(terms, k, k1, b, avgdl)
-    if masks is None:
-        return _exact_topk(terms, k)  # fewer docs than k: nothing to prune
-
-    # mask each term's postings to surviving segments, score exactly
-    pruned = []
-    for t, m in zip(terms, masks):
-        if m is None:
-            pruned.append(t)
-        elif m.any():
-            pruned.append({"docs": t["docs"][m], "scores": t["scores"][m]})
-    return _exact_topk(pruned, k)
-
-
-def _blockmax_masks(terms, k, k1, b, avgdl):
-    """Steps 1-2 of the vectorized block-max pruner: per-term boolean
-    keep-masks over postings (None entry = keep whole term). Returns None
-    when fewer than k candidate docs exist (no valid θ, nothing prunable).
+    NumPy end to end: the asymptotic win of block-max WAND without a
+    per-document Python loop (a DAAT pointer-chasing loop measured >10x
+    slower than exhaustive NumPy scoring on multi-million-posting tasks).
+    Pruning is block-granular: a segment survives whenever any of its
+    covering blocks could reach θ.
 
     A mask drops a doc only when the summed covering-block upper bounds of
     its docID segment fall strictly below θ; a doc is dropped from EVERY
@@ -446,9 +286,8 @@ def _conj_topk(structs, terms, k):
     ranked (score desc, doc asc). The candidate set is the sorted-array
     intersection of the terms' doc lists (smallest-first); ranges
     partition the doc space, so per-range lists merge exactly. Lives here
-    (not serve_direct) because it is shared by BOTH serving paths — the
-    direct range tasks and the channel applyInPandas scorer — one code
-    path, one bit pattern."""
+    (not serve_direct) because the direct range tasks and the channel
+    fallback share it — one code path, one bit pattern."""
     uniq = list(dict.fromkeys(terms))
     if not uniq or any(t not in structs for t in uniq):
         return [], []
@@ -473,10 +312,11 @@ def _score_query_set(
     structs, terms_by_query, k, strategy, k1, b, avgdl, emit_rank
 ):
     """Score every query of a batch against one range's term structs.
-    -> (query_ids, doc_ids, scores, ranks) column lists. The four kernels
-    (_dense/_exact/_blockmax/_wand) are bit-identical including tie-breaks
-    (fuzz-tested); `auto` builds the shared dense doc domain once per call.
-    Shared by the Arrow-channel scorer and the direct serving tasks."""
+    -> (query_ids, doc_ids, scores, ranks) column lists. `auto` scores
+    with `_dense_topk` (shared dense doc domain built once per call),
+    `exact` with `_exact_topk`; the two are bit-identical including
+    tie-breaks (fuzz-tested). Shared by the direct serving tasks and the
+    channel scorer."""
     domain = None  # shared dense doc domain, built on first auto query
     acc = None
     out_q: list[str] = []
@@ -488,11 +328,7 @@ def _score_query_set(
         if not terms:
             continue
         total = sum(len(t["docs"]) for t in terms)
-        if strategy == "wand":
-            # explicit DAAT pointer-chasing WAND (reference algorithm;
-            # equivalence-tested, but Python-loop slow on big tasks)
-            doc_ids, scores = _wand_topk(terms, k, k1, b, avgdl)
-        elif strategy == "auto":
+        if strategy == "auto":
             if domain is None:
                 # once per range: union doc domain + per-term dense
                 # indices into it; every query then scores via buffered
@@ -752,16 +588,16 @@ def _score_segments(
     r_count: int,
     conj_seqs: dict[str, list[int]] | None = None,
 ) -> DataFrame:
-    """Shared scoring core: pruned segment rows → JVM-side range slicing
-    (per TERM, deduplicated across queries) → per-range batch scorer →
-    top-k. The (query, term) map and global dfs are driver-side values
-    carried in the scorer closure — no join fans segment streams out per
-    query, so a hot term shared by the whole batch ships once per range.
-    Used by bm25_topk_segments (self-contained) and Searcher (cached
-    stats/lexicon, minimal per-batch jobs). `conj_seqs` (qid -> term_h
-    list) switches the scorer to conjunctive (all-terms) mode — AND
-    retrieval needs no positions, so unlike phrase it works on the channel
-    path (HDFS-only deployments keep the feature)."""
+    """Channel scorer: pruned segment rows → JVM-side range slicing (per
+    TERM, deduplicated across queries) → per-range batch scorer → top-k.
+    The Searcher runs this only when pyarrow cannot reach the index's
+    storage (its direct range tasks need to open the segment files). The
+    (query, term) map and global dfs are driver-side values carried in the
+    scorer closure — no join fans segment streams out per query, so a hot
+    term shared by the whole batch ships once per range. `conj_seqs` (qid
+    -> term_h list) switches the scorer to conjunctive (all-terms) mode —
+    AND retrieval needs no positions, so unlike phrase it works here
+    (storage reachable only through Hadoop keeps the feature)."""
     block_size = int(stats.get("block_size", 128))
     sliced = _slice_to_ranges(spark, seg, r_count, block_size)
     scorer = _make_batch_scorer(
@@ -789,10 +625,10 @@ def _auto_ranges(total_postings: int, parallelism: int | None = None) -> int:
     Every extra range re-decodes its boundary blocks and re-runs the batch
     scorer once, so fan-out beyond available task slots is pure overhead:
     measured on a 4M-doc index at 8 cores, 16 ranges served the 50-query
-    batch in 15.5s vs 19.8s at 32 and 32.5s at 128 (bench/query_ranges_ab
-    .py). The fan-out is therefore capped at 2x the cluster's core count
-    unless the per-task memory bound (~4x RANGE_TARGET_POSTINGS postings
-    per task) forces more. On a large cluster the parallelism cap is not
+    batch in 15.5s vs 19.8s at 32 and 32.5s at 128 (A/B recorded in the
+    message of commit bcd2123). The fan-out is therefore capped at 2x the
+    cluster's core count unless the per-task memory bound (~4x
+    RANGE_TARGET_POSTINGS postings per task) forces more. On a large cluster the parallelism cap is not
     binding and the work-granule term decides, exactly as before. All
     values of r return identical results (tested ∀R)."""
     ideal = -(-total_postings // RANGE_TARGET_POSTINGS)
@@ -831,67 +667,24 @@ def bm25_topk_segments(
     k: int = 10,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    use_wand: bool | None = None,
     strategy: str = "auto",
     ranges: int | str = "auto",
 ) -> DataFrame:
     """(query_id, rank, doc_id, score) from the compressed segment index.
 
-    strategy: "auto" (default — vectorized exhaustive scoring for small
-    candidate sets, block-max WAND for large), "wand", or "exact". All three
-    return identical results (WAND pruning is lossless; tested); they differ
-    only in speed. use_wand=True/False is the explicit override used by the
-    equivalence tests.
+    One-shot form of `quickb_spark.query.searcher.Searcher`: opens a
+    Searcher on `index_dir` and serves one batch, so it returns exactly
+    what `Searcher.topk` returns. For repeated batches against one index
+    keep a Searcher (cached listings, lexicon and decoded segments).
 
-    ranges: docID-range fan-out per query — "auto" sizes it from the
-    candidate-posting count and the cluster's parallelism (see
-    _auto_ranges: one range per ~2M postings, capped at 32 and at 2x the
-    available task slots), an int forces it. All values return identical
-    results (ranges partition the doc space; tested).
+    strategy: "auto" (default — dense accumulation, block-max pruned on
+    large candidate sets) or "exact" (exhaustive oracle); identical
+    results, they differ only in speed. ranges: docID-range fan-out —
+    "auto" sizes it from the candidate-posting count and the cluster's
+    parallelism (see _auto_ranges), an int forces it; every value returns
+    identical results (ranges partition the doc space; tested)."""
+    from quickb_spark.query.searcher import Searcher
 
-    Self-contained one-shot form: re-lists the index and re-derives per-term
-    df per call. For serving (repeated batches against one index), use
-    quickb_spark.query.searcher.Searcher — same results, cached fixed costs.
-    """
-    if use_wand is True:
-        strategy = "wand"
-    elif use_wand is False:
-        strategy = "exact"
-    stats = load_stats(index_dir)
-    # ONE driver round-trip for the (query, term) map; term + bucket pruning
-    # literals and the scorer's query->terms closure all derive from it
-    qt_rows = query_terms(queries).collect()
-    qt_pairs = sorted({(r["query_id"], r["term"]) for r in qt_rows})
-    terms = sorted({t for _, t in qt_pairs})
-    if not terms:
-        return spark.createDataFrame(
-            [], "query_id string, rank int, doc_id long, score double"
-        )
-    from quickb_spark.functions.hashing import bucket_of, xxhash64
-
-    # v4 term identity: hash query terms driver-side with the bit-identical
-    # xxhash64 mirror; bucket pruning literals derive from the same hash
-    th = {t: xxhash64(t) for t in terms}
-    buckets = sorted({bucket_of(t, stats["term_buckets"]) for t in terms})
-    seg = (
-        spark.read.parquet(f"{index_dir}/segments")
-        .filter(F.col("bucket").isin(buckets))  # partition pruning
-        .filter(F.col("term_h").isin(list(th.values())))  # row-group pruning
-    )
-    # ONE driver round-trip for the global per-term dfs (idf + auto ranges)
-    dfs = {
-        int(r["term_h"]): int(r["df_total"])
-        for r in seg.groupBy("term_h")
-        .agg(F.sum("df_part").alias("df_total"))
-        .collect()
-    }
-    if ranges == "auto":
-        r_count = _auto_ranges(
-            sum(dfs.values()), spark.sparkContext.defaultParallelism
-        )
-    else:
-        r_count = int(ranges)
-    qt_pairs_h = [(q, th[t]) for q, t in qt_pairs]
-    return _score_segments(
-        spark, seg, qt_pairs_h, dfs, stats, k, k1, b, strategy, r_count
+    return Searcher(spark, index_dir, k1, b).topk(
+        queries, k=k, strategy=strategy, ranges=ranges
     )

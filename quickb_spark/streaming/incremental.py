@@ -10,12 +10,14 @@ stream and become queryable in two tiers, the classic base+delta design:
    replays a failed epoch into the same directory).
 2. **Serve** (`query_with_deltas`): BM25 over base segments ∪ delta flats.
    Deltas are small and uncompressed; they join the query path through the
-   declarative scorer while the base uses WAND. Corpus stats (N, avgdl) are
+   declarative scorer over decoded base postings (with no deltas, the
+   Searcher serves the base alone). Corpus stats (N, avgdl) are
    recomputed cheaply from base stats + delta doc counts.
 3. **Compact** (`fold_deltas_into_index`): fold accumulated deltas into the
    bucketed checkpoint and re-encode ONLY the buckets that received new
    postings (bucket pruning makes refresh cost proportional to the delta,
-   not the index).
+   not the index). An index built with `corpus_uri=` (sorted-runs
+   checkpoint) cannot be folded into; the fold fails fast on it.
 
 Watermarks/event-time windows are not needed for index refresh (postings
 are monotone accumulations, not windowed aggregates); the ingest trigger
@@ -107,18 +109,14 @@ def query_with_deltas(
 
     Base and delta partial scores share one (N, avgdl, df) statistics view,
     so scores equal a from-scratch rebuild over base+delta (tested)."""
-    from quickb_spark.index.encode import decode_posting_list  # noqa: F401
     from quickb_spark.query.bm25 import bm25_score_col, query_terms, topk_window
-    from quickb_spark.query.wand import _segment_candidates
+    from quickb_spark.query.wand import _segment_candidates, bm25_topk_segments
 
     delta = _delta_flat(spark, index_dir)
+    if delta is None:
+        return bm25_topk_segments(spark, index_dir, queries, k=k, k1=k1, b=b)
     stats = load_stats(index_dir)
     qt = query_terms(queries)
-
-    if delta is None:
-        from quickb_spark.query.wand import bm25_topk_segments
-
-        return bm25_topk_segments(spark, index_dir, queries, k=k, k1=k1, b=b)
 
     # merged corpus stats
     drow = delta.agg(
@@ -212,9 +210,18 @@ def fold_deltas_into_index(
     index + deltas untouched; a crash after it is finished idempotently by
     the next call via the marker."""
     cfg = cfg or EngineConfig()
+    from quickb_spark.index.p1_direct import RUNS_MARKER
     from quickb_spark.index.segments import build_index
 
     fs = IndexFS(index_dir, spark)
+    if fs.exists(join_path(index_dir, "flat", RUNS_MARKER)):
+        # the sorted-runs checkpoint (corpus_uri= builds) lacks the delta
+        # rows' `first` column, so the union below cannot merge into it
+        raise ValueError(
+            f"folding deltas into {index_dir} is not supported: it was built "
+            "with corpus_uri= (sorted-runs checkpoint). Rebuild with the new "
+            "documents included, or serve them with query_with_deltas"
+        )
     # finish a previously crashed fold before looking at new deltas: the
     # marker survives until build_index completes, so a crash anywhere
     # after the commit point (including between cleanup and re-encode —

@@ -83,8 +83,10 @@ def test_searcher_identical_to_one_shot(spark, built):
     # forced range fan-out and strategy still identical
     assert _ranked(s.topk(fixture_queries()[:8], k=10, ranges=4)) == want
     assert (
-        _ranked(s.topk(fixture_queries()[:8], k=10, strategy="wand")) == want
+        _ranked(s.topk(fixture_queries()[:8], k=10, strategy="exact")) == want
     )
+    with pytest.raises(ValueError, match="strategy must be"):
+        s.topk(fixture_queries()[:8], k=10, strategy="unknown")
 
 
 def test_searcher_absent_and_empty_queries(spark, built):
@@ -157,30 +159,41 @@ def test_preload_warms_caches_and_preserves_results(spark, built):
     assert s.preload() == 0
 
 
-def test_direct_vs_channel_serving_identity(spark, built, monkeypatch):
-    """The direct (pyarrow range-task) serving path and the Arrow-channel
-    path must return identical results for every strategy and range count
-    — QKB_SERVE_CHANNEL=1 is the A/B switch."""
+def test_direct_vs_channel_serving_identity(
+    spark, built, make_storage_unreachable
+):
+    """When pyarrow cannot reach the index's storage, the Searcher and the
+    one-shot API fall back to the channel scorer on their own (no setting
+    selects it), and return exactly the direct path's rows for every
+    strategy and range count, any-mode and AND-mode alike."""
     qs = fixture_queries()[:8]
+    qdf = spark.createDataFrame(qs, ["query_id", "query_text"])
+    grid = [(st, r) for st in ("auto", "exact") for r in ("auto", 1, 4)]
     s = Searcher(spark, built)
     direct = {
-        ("auto", "auto"): _ranked(s.topk(qs, k=10)),
-        ("auto", 4): _ranked(s.topk(qs, k=10, ranges=4)),
-        ("exact", 1): _ranked(s.topk(qs, k=10, strategy="exact", ranges=1)),
-        ("wand", 2): _ranked(s.topk(qs, k=10, strategy="wand", ranges=2)),
+        (st, r, conj): _ranked(
+            s.topk(qs, k=10, strategy=st, ranges=r, match_all=conj)
+        )
+        for st, r in grid
+        for conj in (False, True)
     }
-    monkeypatch.setenv("QKB_SERVE_CHANNEL", "1")
-    assert _ranked(s.topk(qs, k=10)) == direct[("auto", "auto")]
-    assert _ranked(s.topk(qs, k=10, ranges=4)) == direct[("auto", 4)]
-    assert (
-        _ranked(s.topk(qs, k=10, strategy="exact", ranges=1))
-        == direct[("exact", 1)]
-    )
-    assert (
-        _ranked(s.topk(qs, k=10, strategy="wand", ranges=2))
-        == direct[("wand", 2)]
-    )
-    assert len(direct[("auto", "auto")]) > 50
+    assert len(direct[("auto", "auto", False)]) > 50
+    assert direct[("auto", "auto", True)]
+
+    make_storage_unreachable()
+    s = Searcher(spark, built)
+    assert s._files_for([0]) is None
+    for st, r in grid:
+        ch_any = _ranked(s.topk(qs, k=10, strategy=st, ranges=r))
+        ch_and = _ranked(
+            s.topk(qs, k=10, strategy=st, ranges=r, match_all=True)
+        )
+        one_shot = _ranked(
+            bm25_topk_segments(spark, built, qdf, k=10, strategy=st, ranges=r)
+        )
+        assert ch_any == direct[(st, r, False)], (st, r)
+        assert ch_and == direct[(st, r, True)], (st, r)
+        assert one_shot == direct[(st, r, False)], (st, r)
 
 
 def test_driver_side_lexicon_identity(spark, built):

@@ -24,7 +24,12 @@ from quickb_spark.index.segments import (
     load_stats,
     segments_meta,
 )
-from quickb_spark.query.wand import _exact_topk, _wand_topk, bm25_topk_segments
+from quickb_spark.query.wand import (
+    _blockmax_masks,
+    _dense_topk,
+    _exact_topk,
+    bm25_topk_segments,
+)
 from tests.oracle_bm25 import OracleIndex
 
 N_DOCS = 250
@@ -128,10 +133,13 @@ def test_segment_positions_roundtrip_to_oracle(spark, built, oracle):
 
 
 def test_wand_matches_naive_and_oracle(spark, built, oracle):
+    """The engine (strategy="auto": block-max pruned dense top-k) equals
+    the exhaustive in-package scorer (strategy="exact") and the
+    brute-force Python oracle."""
     queries = fixture_queries()
     qdf = spark.createDataFrame(queries, ["query_id", "query_text"])
-    wand = bm25_topk_segments(spark, built, qdf, k=10, use_wand=True).collect()
-    naive = bm25_topk_segments(spark, built, qdf, k=10, use_wand=False).collect()
+    wand = bm25_topk_segments(spark, built, qdf, k=10, strategy="auto").collect()
+    naive = bm25_topk_segments(spark, built, qdf, k=10, strategy="exact").collect()
 
     def by_q(rows):
         out = {}
@@ -168,30 +176,34 @@ def test_range_fanout_is_exact(spark, built, r_count):
     base = sorted(
         map(tuple, bm25_topk_segments(spark, built, qdf, k=10, ranges=1).collect())
     )
-    for use_wand in (True, False):
+    for strategy in ("auto", "exact"):
         got = sorted(
             map(
                 tuple,
                 bm25_topk_segments(
-                    spark, built, qdf, k=10, use_wand=use_wand, ranges=r_count
+                    spark, built, qdf, k=10, strategy=strategy, ranges=r_count
                 ).collect(),
             )
         )
-        assert got == base, (r_count, use_wand)
+        assert got == base, (r_count, strategy)
 
 
-def test_wand_prunes(built):
-    # synthetic check that the WAND path actually skips: one strong rare
-    # term + one weak common term; common-term tail must not all be scored
-    rng = np.random.RandomState(0)
+def test_wand_prunes():
+    """Block-max pruning must actually prune, not only stay exact: one
+    strong rare term + one weak common term, and `_blockmax_masks` must
+    drop most of the common term's postings before they are scored.
+    Pruning is block-granular — a docID segment survives while any
+    covering block could reach θ — so the rare term sits in the first 1%
+    of the docID space; spread over every common block it would cover
+    (and keep) them all."""
+    from quickb_spark.index.encode import block_meta
+
     common_docs = np.arange(0, 100_000, dtype=np.int64)
-    rare_docs = np.arange(0, 100_000, 1000, dtype=np.int64)
+    rare_docs = np.arange(0, 1000, 10, dtype=np.int64)
 
     def mk(docs, tf, idf):
         tfs = np.full(len(docs), tf, dtype=np.int64)
         dls = np.full(len(docs), 100, dtype=np.int64)
-        from quickb_spark.index.encode import block_meta
-
         last, mtf, mdl = block_meta(docs, tfs, dls, 128)
         return {
             "docs": docs,
@@ -205,10 +217,20 @@ def test_wand_prunes(built):
         }
 
     terms = [mk(common_docs, 1, 0.01), mk(rare_docs, 5, 5.0)]
-    ids_w, sc_w = _wand_topk(terms, 10, 1.2, 0.75, 100.0)
+    masks = _blockmax_masks(terms, 10, 1.2, 0.75, 100.0)
+    assert masks is not None and masks[1] is None  # rare term kept whole
+    kept = int(masks[0].sum())
+    assert kept < len(common_docs) // 10, kept  # >90% of postings dropped
+    assert masks[0][rare_docs].all()  # never a doc that can reach θ
+
+    domain = np.unique(np.concatenate([t["docs"] for t in terms]))
+    for t in terms:
+        t["dense"] = np.searchsorted(domain, t["docs"])
+    acc = np.zeros(len(domain))
     ids_e, sc_e = _exact_topk(terms, 10)
-    assert ids_w == ids_e
-    assert np.allclose(sc_w, sc_e)
+    assert _dense_topk(
+        terms, 10, domain, acc, True, 1.2, 0.75, 100.0
+    ) == (ids_e, sc_e)
 
 
 def test_resume_skips_done_buckets(spark, chunks, tmp_path):
@@ -290,8 +312,9 @@ def test_segment_scan_prunes_partitions_and_pushes_filters(spark, built, tmp_pat
     """The README's plan claim, asserted: the query-side segment scan must
     (a) PARTITION-prune to the query terms' buckets, (b) push the term_h
     predicate into the parquet scan (PushedFilters), and (c) prune columns
-    to the projection (ReadSchema). Guards the scan shape in
-    query/wand.py:555-559 — a regression here silently turns
+    to the projection (ReadSchema). Guards the scan shape of the Searcher's
+    channel fallback (query/searcher.py) and of the streaming base scan
+    (query/wand._segment_candidates) — a regression here silently turns
     O(query terms) serving into O(index).
 
     Pruning is proven BEHAVIORALLY, not just by plan text: a poison
@@ -517,11 +540,11 @@ def test_conjunctive_subset_of_any_mode_results(spark, built, chunks):
     assert phr <= cj
 
 
-def test_conjunctive_mode_guards(spark, built, chunks, monkeypatch):
-    """phrase+match_all rejected; slop validated; phrase still raises on
-    the channel path; conjunctive no longer does — AND-mode needs no
-    positions, so the channel scorer serves it (HDFS-only deployments keep
-    the feature), identical to the direct path."""
+def test_conjunctive_mode_guards(spark, built, chunks, make_storage_unreachable):
+    """phrase+match_all rejected; slop validated. On index storage pyarrow
+    cannot reach, the Searcher falls back to the channel scorer by itself:
+    conjunctive queries still return the direct path's rows (AND-mode
+    needs no positions), and phrase raises a clear error."""
     from quickb_spark.query.searcher import Searcher
 
     s = Searcher(spark, built)
@@ -533,8 +556,9 @@ def test_conjunctive_mode_guards(spark, built, chunks, monkeypatch):
         s.topk([("q1", "def import")], phrase=True, slop=-1)
     queries = _conj_queries(chunks)[:5]
     want = sorted(map(tuple, s.topk(queries, k=10, match_all=True).collect()))
-    monkeypatch.setenv("QKB_SERVE_CHANNEL", "1")
-    with pytest.raises(ValueError, match="direct serving path"):
+    make_storage_unreachable()
+    s = Searcher(spark, built)
+    with pytest.raises(ValueError, match="phrase queries need index storage"):
         s.topk([("q1", "def import")], phrase=True)
     got = sorted(map(tuple, s.topk(queries, k=10, match_all=True).collect()))
     assert [(q, r, d) for q, r, d, _ in got] == [

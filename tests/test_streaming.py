@@ -151,6 +151,50 @@ def test_fold_crash_recovery_exactly_once(spark, tmp_path):
     assert got == want
 
 
+def test_fold_rejects_corpus_uri_index(spark, tmp_path):
+    """A corpus_uri= build writes the sorted-runs checkpoint, which the
+    fold cannot merge deltas into: fold_deltas_into_index must fail fast
+    with a clear message, before it reads the deltas, and leave the index
+    and its deltas exactly as they were (the deltas stay servable)."""
+    import os
+
+    from quickb_spark.corpus import DOCUMENTS_SCHEMA
+
+    base = generate_documents_df(spark, 60, seed=9, partitions=2)
+    alldocs = generate_documents_df(spark, 80, seed=9, partitions=2)
+    corpus = str(tmp_path / "corpus")
+    base.write.parquet(corpus)
+    idx = str(tmp_path / "idx")
+    build_index(spark, index_dir=idx, cfg=CFG, corpus_uri=corpus)
+    src = str(tmp_path / "in")
+    alldocs.exceptAll(base).write.parquet(src)
+    stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(src)
+    start_incremental_ingest(spark, stream, idx, CFG).awaitTermination(120)
+
+    def snapshot():
+        out = {}
+        for root, _dirs, files in os.walk(idx):
+            for f in files:
+                st = os.stat(os.path.join(root, f))
+                out[os.path.relpath(os.path.join(root, f), idx)] = (
+                    st.st_size, st.st_mtime_ns,
+                )
+        return out
+
+    qdf = spark.createDataFrame(fixture_queries()[:10], ["query_id", "query_text"])
+    before_files = snapshot()
+    before = _collect_ranked(bm25_topk_segments(spark, idx, qdf, k=10))
+    with pytest.raises(ValueError, match="not supported: it was built with corpus_uri="):
+        fold_deltas_into_index(spark, idx, CFG)
+    assert snapshot() == before_files
+    assert _collect_ranked(bm25_topk_segments(spark, idx, qdf, k=10)) == before
+
+    fresh = str(tmp_path / "fresh")
+    build_index(spark, index_dir=fresh, cfg=CFG, documents=alldocs)
+    expected = _collect_ranked(bm25_topk_segments(spark, fresh, qdf, k=10))
+    assert _collect_ranked(query_with_deltas(spark, idx, qdf, k=10)) == expected
+
+
 def test_gen_document_prefix_stability():
     # exceptAll(base) as "new docs" is only valid if generation is
     # row-index-stable: doc i is identical in any corpus size

@@ -1,12 +1,13 @@
-"""Pure-Python fuzz: block-max WAND must be bit-identical to the exhaustive
-scorer on random posting sets (lossless pruning — SURVEY.md §7 hard part b)."""
+"""Pure-Python fuzz: the engine's dense kernel, with and without block-max
+pruning, must be bit-identical to the exhaustive scorer on random posting
+sets (lossless pruning — SURVEY.md §7 hard part b)."""
 
 from __future__ import annotations
 
 import numpy as np
 
 from quickb_spark.index.encode import block_meta
-from quickb_spark.query.wand import _blockmax_topk, _exact_topk, _wand_topk
+from quickb_spark.query.wand import _dense_topk, _exact_topk
 
 
 def _mk_term(rng, n_corpus, df, big_ids=False):
@@ -31,85 +32,48 @@ def _mk_term(rng, n_corpus, df, big_ids=False):
     }
 
 
-def test_wand_equals_exact_fuzz():
-    for trial in range(80):
-        rng = np.random.RandomState(trial)
-        n = int(rng.choice([50, 500, 3000]))
-        big = trial % 2 == 1
-        terms = [
-            _mk_term(rng, n, rng.randint(1, n + 1), big_ids=big)
-            for _ in range(rng.randint(1, 6))
-        ]
-        for k in (1, 3, 10):
-            iw, sw = _wand_topk(terms, k, 1.2, 0.75, 100.0)
-            ie, se = _exact_topk(terms, k)
-            assert iw == ie, (trial, k)
-            assert np.allclose(sw, se, atol=1e-12)
-
-
-def test_blockmax_equals_exact_fuzz():
-    """The vectorized block-max pruner must be bit-identical to the
-    exhaustive scorer — same lossless-pruning bar as the DAAT WAND loop,
-    including kth-score ties and 63-bit doc ids."""
-    for trial in range(80):
-        rng = np.random.RandomState(1000 + trial)
-        n = int(rng.choice([50, 500, 3000]))
-        big = trial % 2 == 1
-        terms = [
-            _mk_term(rng, n, rng.randint(1, n + 1), big_ids=big)
-            for _ in range(rng.randint(1, 6))
-        ]
-        for k in (1, 3, 10):
-            ib, sb = _blockmax_topk(terms, k, 1.2, 0.75, 100.0)
-            ie, se = _exact_topk(terms, k)
-            assert ib == ie, (trial, k)
-            assert np.allclose(sb, se, atol=1e-12)
-
-
-def test_blockmax_tie_heavy():
+def _tie_heavy(t):
     """Constant tf/dl makes every posting of a term score identically —
     maximal kth-score ties, the adversarial case for strict-< pruning."""
-    for trial in range(20):
-        rng = np.random.RandomState(7000 + trial)
-        n = 400
-        terms = []
-        for _ in range(rng.randint(1, 5)):
-            t = _mk_term(rng, n, rng.randint(5, n + 1))
-            t["tfs"][:] = 3
-            t["dls"][:] = 100
-            from quickb_spark.index.encode import block_meta as _bm
+    t["tfs"][:] = 3
+    t["dls"][:] = 100
+    t["block_last_doc"], t["block_max_tf"], t["block_min_dl"] = block_meta(
+        t["docs"], t["tfs"], t["dls"], 32
+    )
+    t["scores"] = (
+        t["idf"] * t["tfs"] * 2.2
+        / (t["tfs"] + 1.2 * (0.25 + 0.75 * t["dls"] / 100.0))
+    )
+    return t
 
-            last, mtf, mdl = _bm(t["docs"], t["tfs"], t["dls"], 32)
-            t["block_last_doc"], t["block_max_tf"], t["block_min_dl"] = (
-                last, mtf, mdl,
-            )
-            t["scores"] = (
-                t["idf"] * t["tfs"] * 2.2
-                / (t["tfs"] + 1.2 * (0.25 + 0.75 * t["dls"] / 100.0))
-            )
-            terms.append(t)
-        for k in (1, 5, 10):
-            ib, sb = _blockmax_topk(terms, k, 1.2, 0.75, 100.0)
+
+def _check_dense(rng, pool, ks, n_queries, tag):
+    """Score several "queries" over term subsets of one "range", exactly as
+    _score_query_set wires it: one shared domain + dense indices + one
+    REUSED accumulator (stale residue from a previous query would corrupt
+    the next), with and without block-max pruning."""
+    domain = np.unique(np.concatenate([t["docs"] for t in pool]))
+    for t in pool:
+        t["dense"] = np.searchsorted(domain, t["docs"])
+    acc = np.zeros(len(domain))
+    for q in range(n_queries):
+        nt = rng.randint(1, len(pool) + 1)
+        terms = [pool[i] for i in rng.permutation(len(pool))[:nt]]
+        for k in ks:
             ie, se = _exact_topk(terms, k)
-            assert ib == ie, (trial, k)
-            assert np.allclose(sb, se, atol=1e-12)
-
-
-def test_blockmax_empty_and_small():
-    assert _blockmax_topk([], 10, 1.2, 0.75, 100.0) == ([], [])
-    rng = np.random.RandomState(0)
-    t = _mk_term(rng, 100, 1)
-    ids, sc = _blockmax_topk([t], 10, 1.2, 0.75, 100.0)
-    assert ids == t["docs"].tolist()
+            for prune in (False, True):
+                idn, sdn = _dense_topk(
+                    terms, k, domain, acc, prune, 1.2, 0.75, 100.0
+                )
+                assert idn == ie, (tag, q, k, prune)
+                assert sdn == se, (tag, q, k, prune)  # bit-identical
 
 
 def test_dense_equals_exact_fuzz():
     """The shared-domain dense batch kernel must be bit-identical to the
-    exhaustive scorer — across a reused accumulator (stale residue from a
-    previous query would corrupt the next), with and without block-max
-    pruning, including kth-ties and 63-bit ids."""
-    from quickb_spark.query.wand import _dense_topk
-
+    exhaustive scorer — across a reused accumulator, with and without
+    block-max pruning, including kth-ties, 63-bit ids, all-tied terms and
+    empty/tiny inputs."""
     for trial in range(40):
         rng = np.random.RandomState(3000 + trial)
         n = int(rng.choice([50, 500, 3000]))
@@ -118,38 +82,25 @@ def test_dense_equals_exact_fuzz():
             _mk_term(rng, n, rng.randint(1, n + 1), big_ids=big)
             for _ in range(rng.randint(2, 7))
         ]
-        if trial % 3 == 0:  # tie-heavy variant
-            for t in pool:
-                t["tfs"][:] = 3
-                t["dls"][:] = 100
-                last, mtf, mdl = block_meta(t["docs"], t["tfs"], t["dls"], 32)
-                t["block_last_doc"], t["block_max_tf"], t["block_min_dl"] = (
-                    last, mtf, mdl,
-                )
-                t["scores"] = (
-                    t["idf"] * t["tfs"] * 2.2
-                    / (t["tfs"] + 1.2 * (0.25 + 0.75 * t["dls"] / 100.0))
-                )
-        # once per "range": shared domain + dense indices + accumulator,
-        # exactly as _make_batch_scorer wires it
-        domain = np.unique(np.concatenate([t["docs"] for t in pool]))
-        for t in pool:
-            t["dense"] = np.searchsorted(domain, t["docs"])
-        acc = np.zeros(len(domain))
-        # several "queries" over term subsets REUSING the same accumulator
-        for q in range(4):
-            nt = rng.randint(1, len(pool) + 1)
-            terms = [pool[i] for i in rng.permutation(len(pool))[:nt]]
-            for k in (1, 3, 10):
-                for prune in (False, True):
-                    idn, sdn = _dense_topk(
-                        terms, k, domain, acc, prune, 1.2, 0.75, 100.0
-                    )
-                    ie, se = _exact_topk(terms, k)
-                    assert idn == ie, (trial, q, k, prune)
-                    assert sdn == se, (trial, q, k, prune)  # bit-identical
-    assert _dense_topk([], 10, np.empty(0, np.int64), np.empty(0), False,
+        if trial % 3 == 0:
+            pool = [_tie_heavy(t) for t in pool]
+        _check_dense(rng, pool, (1, 3, 10), 4, ("fuzz", trial))
+    for trial in range(20):
+        rng = np.random.RandomState(7000 + trial)
+        pool = [
+            _tie_heavy(_mk_term(rng, 400, rng.randint(5, 401)))
+            for _ in range(rng.randint(1, 5))
+        ]
+        _check_dense(rng, pool, (1, 5, 10), 2, ("ties", trial))
+    assert _dense_topk([], 10, np.empty(0, np.int64), np.empty(0), True,
                        1.2, 0.75, 100.0) == ([], [])
+    # fewer docs than k: nothing to prune, every doc returned
+    t = _mk_term(np.random.RandomState(0), 100, 1)
+    t["dense"] = np.zeros(1, dtype=np.int64)
+    for prune in (False, True):
+        ids, _ = _dense_topk([t], 10, t["docs"], np.zeros(1), prune,
+                             1.2, 0.75, 100.0)
+        assert ids == t["docs"].tolist()
 
 
 def test_auto_ranges_policy():
@@ -188,11 +139,3 @@ def test_auto_ranges_policy():
     # the memory floor allows it; otherwise the cap wins as before
     assert _auto_ranges(120 * t, parallelism=12) == MAX_RANGES  # floor 30
     assert _auto_ranges(72 * t, parallelism=12) == 24  # floor 18 -> 24
-
-
-def test_wand_empty_and_single():
-    assert _wand_topk([], 10, 1.2, 0.75, 100.0) == ([], [])
-    rng = np.random.RandomState(0)
-    t = _mk_term(rng, 100, 1)
-    ids, sc = _wand_topk([t], 10, 1.2, 0.75, 100.0)
-    assert ids == t["docs"].tolist()
